@@ -24,6 +24,10 @@ from mimranalytics_core_spark.functions.graph_algos import (
     betweenness,
     bfs_distances,
     connected_components,
+    multi_source_distances,
+    multi_source_k_shortest_paths,
+    multi_source_shortest_paths,
+    multi_source_sigma,
     pagerank,
     ubo_closure,
     undirect,
@@ -309,6 +313,42 @@ def _directed_view(e: DataFrame, direction: str) -> DataFrame:
     raise ValueError(f"unknown direction {direction!r} (out | in | both)")
 
 
+def _bfs_pairs(
+    bfs,
+    cols: list,
+    spark: SparkSession,
+    sf_dir: str,
+    edge_types: list[str] | None,
+    min_hops: int,
+    max_hops: int,
+    src_pred: str | None,
+    as_of: str | None,
+    graph: str,
+    direction: str,
+    **kw,
+) -> DataFrame:
+    """Run the per-source BFS function ``bfs`` (functions/graph_algos) from
+    every source of the selected edge view that satisfies ``src_pred`` →
+    (src, dst, hops, *cols) with min_hops <= hops <= max_hops. One join +
+    anti-join per level for ALL sources at once — supersteps = max_hops
+    regardless of |V| or |sources|, no path-SET enumeration (a per-path
+    closure would be O(walks) on cyclic graphs)."""
+    e = _edge_frame(spark, sf_dir, edge_types=edge_types, as_of=as_of, graph=graph)
+    e = _directed_view(e.select("src", "dst"), direction)
+    sources = e.select("src").distinct()
+    if src_pred is not None:
+        sources = sources.filter(F.expr(src_pred))
+    d = bfs(e, sources.select(F.col("src").alias("node")), max_depth=max_hops, **kw)
+    return d.filter(
+        (F.col("dist") >= F.lit(min_hops)) & (F.col("dist") <= F.lit(max_hops))
+    ).select(
+        F.col("source").alias("src"),
+        F.col("node").alias("dst"),
+        F.col("dist").cast("int").alias("hops"),
+        *cols,
+    )
+
+
 def shortest_paths(
     spark: SparkSession,
     sf_dir: str,
@@ -323,40 +363,19 @@ def shortest_paths(
 ) -> DataFrame:
     """Cypher ``shortestPath((a)-[*min..max]->(b))`` semantics: the min-hop
     distance per reachable (src, dst) pair, for every source satisfying
-    ``src_pred`` → (src, dst, hops) with min_hops <= hops <= max_hops.
-    With ``keep_paths``, one reconstructed shortest path per pair rides
-    along as a node-id array column ``path_nodes`` (round-13 — nodes(p)/
-    relationships(p) on shortestPath patterns).
-
-    Execution is the level-synchronous multi-source BFS
-    (functions/graph_algos.multi_source_distances, or its
-    multi_source_shortest_paths twin when paths are requested): one join +
-    anti-join per level for ALL sources at once — supersteps = max_hops
-    regardless of |V| or |sources|, no path-SET enumeration (the
-    scale-correct shortest-path shape; a per-path closure would be
-    O(walks) on cyclic graphs)."""
-    from mimranalytics_core_spark.functions.graph_algos import (
-        multi_source_distances,
-        multi_source_shortest_paths,
-    )
-
-    e = _edge_frame(spark, sf_dir, edge_types=edge_types, as_of=as_of, graph=graph)
-    e = _directed_view(e.select("src", "dst"), direction)
-    sources = e.select("src").distinct()
-    if src_pred is not None:
-        sources = sources.filter(F.expr(src_pred))
-    bfs = multi_source_shortest_paths if keep_paths else multi_source_distances
-    d = bfs(e, sources.select(F.col("src").alias("node")), max_depth=max_hops)
-    cols = [
-        F.col("source").alias("src"),
-        F.col("node").alias("dst"),
-        F.col("dist").cast("int").alias("hops"),
-    ]
+    ``src_pred`` → (src, dst, hops) with min_hops <= hops <= max_hops
+    (functions/graph_algos.multi_source_distances). With ``keep_paths``,
+    one reconstructed shortest path per pair rides along as a node-id array
+    column ``path_nodes`` (nodes(p)/relationships(p) on shortestPath
+    patterns; functions/graph_algos.multi_source_shortest_paths)."""
     if keep_paths:
-        cols.append(F.col("path").alias("path_nodes"))
-    return d.filter(
-        (F.col("dist") >= F.lit(min_hops)) & (F.col("dist") <= F.lit(max_hops))
-    ).select(*cols)
+        bfs, cols = multi_source_shortest_paths, [F.col("path").alias("path_nodes")]
+    else:
+        bfs, cols = multi_source_distances, []
+    return _bfs_pairs(
+        bfs, cols, spark, sf_dir, edge_types, min_hops, max_hops, src_pred, as_of, graph,
+        direction,
+    )
 
 
 def all_shortest_paths(
@@ -375,29 +394,13 @@ def all_shortest_paths(
     distinct shortest paths σ → (src, dst, hops, n_paths).
 
     σ is computed by the Brandes forward phase
-    (functions/graph_algos.multi_source_sigma) — a level-synchronous BFS
-    summing path counts over predecessors — WITHOUT enumerating paths, so
-    the cost is supersteps = hop bound at any graph size (min-hop paths
-    never repeat nodes, so σ equals the simple-path count by construction).
+    (functions/graph_algos.multi_source_sigma), summing path counts over
+    predecessors WITHOUT enumerating paths (min-hop paths never repeat
+    nodes, so σ equals the simple-path count by construction).
     """
-    from mimranalytics_core_spark.functions.graph_algos import multi_source_sigma
-
-    e = _edge_frame(spark, sf_dir, edge_types=edge_types, as_of=as_of, graph=graph)
-    e = _directed_view(e.select("src", "dst"), direction)
-    sources = e.select("src").distinct()
-    if src_pred is not None:
-        sources = sources.filter(F.expr(src_pred))
-    sig = multi_source_sigma(
-        e, sources.select(F.col("src").alias("node")), max_depth=max_hops
-    )
-    return (
-        sig.filter((F.col("dist") >= F.lit(min_hops)) & (F.col("dist") <= F.lit(max_hops)))
-        .select(
-            F.col("source").alias("src"),
-            F.col("node").alias("dst"),
-            F.col("dist").cast("int").alias("hops"),
-            F.col("sigma").alias("n_paths"),
-        )
+    return _bfs_pairs(
+        multi_source_sigma, [F.col("sigma").alias("n_paths")], spark, sf_dir, edge_types,
+        min_hops, max_hops, src_pred, as_of, graph, direction,
     )
 
 
@@ -413,35 +416,17 @@ def k_shortest_paths(
     graph: str = "hierarchy",
     direction: str = "out",
 ) -> DataFrame:
-    """Bounded-K allShortestPaths ENUMERATION (round-14, r13 VERDICT
-    'missing' #6): per reachable (src, dst) pair, the min-hop distance,
-    the EXACT shortest-path count σ, and the ``k`` lexicographically-
-    smallest shortest paths as '|'-joined node-id strings →
-    (src, dst, hops, n_paths, paths). ``n_paths > size(paths)`` makes the
-    cap visible. The per-level cap is exact, not approximate — see
-    functions/graph_algos.multi_source_k_shortest_paths. Row width stays
+    """Bounded-K allShortestPaths ENUMERATION: per reachable (src, dst)
+    pair, the min-hop distance, the EXACT shortest-path count σ, and the
+    ``k`` lexicographically-smallest shortest paths as '|'-joined node-id
+    strings → (src, dst, hops, n_paths, paths). ``n_paths > size(paths)``
+    makes the cap visible. The per-level cap is exact, not approximate —
+    see functions/graph_algos.multi_source_k_shortest_paths. Row width stays
     O(k·depth) ids at any graph size; the unbounded path SET (which
     explodes combinatorially) is never materialized."""
-    from mimranalytics_core_spark.functions.graph_algos import (
-        multi_source_k_shortest_paths,
-    )
-
-    e = _edge_frame(spark, sf_dir, edge_types=edge_types, as_of=as_of, graph=graph)
-    e = _directed_view(e.select("src", "dst"), direction)
-    sources = e.select("src").distinct()
-    if src_pred is not None:
-        sources = sources.filter(F.expr(src_pred))
-    out = multi_source_k_shortest_paths(
-        e, sources.select(F.col("src").alias("node")), max_depth=max_hops, k=k
-    )
-    return out.filter(
-        (F.col("dist") >= F.lit(min_hops)) & (F.col("dist") <= F.lit(max_hops))
-    ).select(
-        F.col("source").alias("src"),
-        F.col("node").alias("dst"),
-        F.col("dist").cast("int").alias("hops"),
-        F.col("sigma").alias("n_paths"),
-        "paths",
+    return _bfs_pairs(
+        multi_source_k_shortest_paths, [F.col("sigma").alias("n_paths"), "paths"], spark,
+        sf_dir, edge_types, min_hops, max_hops, src_pred, as_of, graph, direction, k=k,
     )
 
 
@@ -708,7 +693,6 @@ def export_graph_viz(
     the directed edges with both endpoints inside it (kind='edge', a=src,
     b=dst, hop=-1). When ``path`` is given the frame is also written as a
     JSON artifact (the serialization a viz front-end consumes)."""
-    from mimranalytics_core_spark.functions.graph_algos import bfs_distances, undirect
     from mimranalytics_core_spark.sources.io import export_report
 
     tables(spark, sf_dir)

@@ -10,8 +10,16 @@ Semantics notes:
   Π(edge weight) (reference README.md:13). On cyclic graphs the infinite sum
   is truncated by the depth bound — the same definition the recursive-CTE
   oracle uses (SURVEY.md §7.8.4), so engine and oracle agree by construction.
-- ``bfs_distances`` / ``weighted_sssp``: min-hop / min-cost from a seed set;
-  per-level frontier with min-agg dedup (no walk enumeration blowup).
+- Min-hop search runs on ONE level-synchronous BFS kernel,
+  ``_bfs_levels``: per level, join the frontier to the checkpointed edges,
+  collapse each key, anti-join the keys already settled, checkpoint, stop
+  when a level is empty — O(nodes · depth) rows, never walk enumeration.
+  Its six users differ only in key, carried column and per-key aggregate:
+  ``bfs_distances`` (node), ``multi_source_distances`` ((source, node)),
+  ``multi_source_shortest_paths`` (min path array),
+  ``multi_source_k_shortest_paths`` (σ and the k smallest path strings),
+  ``multi_source_sigma`` (σ) and the forward phase of ``betweenness`` (σ).
+- ``weighted_sssp``: min-cost from a seed by relaxation to fixpoint.
 - ``connected_components``: min-label propagation to fixpoint.
 - ``pagerank``: fixed-iteration damped propagation, dangling mass
   redistributed uniformly, all inside the plan.
@@ -19,11 +27,13 @@ Semantics notes:
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mimranalytics_core_spark.plans.pregel import iterate_fixpoint
+from mimranalytics_core_spark.plans.pregel import CHANGED_COL, iterate_fixpoint
 
 
 def undirect(edges: DataFrame) -> DataFrame:
@@ -65,18 +75,6 @@ def ubo_closure(edges: DataFrame, max_depth: int = 6, threshold: float = 0.0) ->
         acc = acc.unionByName(frontier)
     out = acc.groupBy("owner", "entity").agg(F.sum("frac").alias("effective_ownership"))
     return out.filter(F.col("effective_ownership") >= threshold)
-
-
-# Per-iteration rank-vector checkpoints in the pagerank family are LAZY
-# (round-16): eager forced one driver-blocking job per iteration; a lazy
-# localCheckpoint materializes on first use inside the consuming job with
-# identical lineage truncation and reuse (the dangling-mass branch still
-# reads the persisted partitions, never recomputes the superstep).
-# Interleaved A/B, min-of-reps: graph_pagerank_weighted 2.98 -> 2.79 s at
-# sf0.1 and 8.86 -> 7.71 s on the 10x replica; graph_pagerank 7.55 -> 6.59
-# at sf1. The once-computed frames (nodes/shares/dangling/teleport) stay
-# eager — they are consumed by many jobs including driver-side count().
-_PR_CKPT_EAGER = False
 
 
 def path_rows(
@@ -209,103 +207,103 @@ def path_rows(
     return out.filter(F.col("hops") >= min_hops).select(*cols)
 
 
-def bfs_distances(edges: DataFrame, seeds: DataFrame, max_depth: int = 10) -> DataFrame:
-    """Min-hop distance from a seed set: (node, dist). ``seeds``: (node)."""
-    # materialize once: each level joins edges; a lazy derivation would be
-    # re-executed per level
-    edges = edges.select("src", "dst").localCheckpoint(eager=True)
-    dist = seeds.select("node").distinct().withColumn("dist", F.lit(0))
-    frontier = dist
+def _bfs_levels(
+    edges: DataFrame,
+    frontier: DataFrame,
+    keys: tuple[str, ...],
+    max_depth: int,
+    carry: tuple = (),
+    aggs: tuple = (),
+    state_partitions: int | None = None,
+) -> tuple[DataFrame, list[DataFrame]]:
+    """The level-synchronous BFS behind every min-hop function here:
+    ``(checkpointed edges, [frontier, level 1, …])``.
+
+    ``frontier`` is level 0 and holds ``keys`` (``node`` or ``(source,
+    node)``), ``dist`` and the carried columns. Per level the frontier joins
+    the edges on ``node = src``, projects ``keys`` (``node`` := ``dst``) and
+    ``carry``, collapses each key with ``aggs`` (``distinct`` without),
+    drops the keys settled at an earlier level with a ``left_anti`` join,
+    stamps ``dist`` and is checkpointed; an empty level ends the loop
+    early. The aggregate runs BEFORE the anti-join: the join keys equal the
+    grouping keys, so each group is kept or dropped whole, and in this
+    order Catalyst keeps the anti-join above the edge join. Supersteps ≤
+    ``max_depth`` at any |V| or number of sources; ``state_partitions``
+    coalesces the edges and every level."""
+    edges = edges.select("src", "dst")
+    if state_partitions is not None:
+        edges = edges.coalesce(state_partitions)
+    # materialized once: every level joins it
+    edges = edges.localCheckpoint(eager=True)
+    step = [F.col("dst").alias("node") if k == "node" else k for k in keys]
+    levels, seen = [frontier], frontier
     for level in range(1, max_depth + 1):
-        nxt = (
-            frontier.join(edges, frontier.node == edges.src)
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(dist.select("node"), "node", "left_anti")
-            .withColumn("dist", F.lit(level))
-            .localCheckpoint(eager=True)
+        nxt = frontier.join(edges, frontier.node == edges.src).select(*step, *carry)
+        nxt = nxt.groupBy(*keys).agg(*aggs) if aggs else nxt.distinct()
+        nxt = nxt.join(seen.select(*keys), list(keys), "left_anti").withColumn(
+            "dist", F.lit(level)
         )
+        if state_partitions is not None:
+            nxt = nxt.coalesce(state_partitions)
+        nxt = nxt.localCheckpoint(eager=True)
         if nxt.isEmpty():
             break
-        dist = dist.unionByName(nxt)
+        levels.append(nxt)
+        seen = seen.unionByName(nxt)
         frontier = nxt
-    return dist
+    return edges, levels
+
+
+_PAIR = ("source", "node")
+
+
+def _source_frontier(sources: DataFrame, *carry) -> DataFrame:
+    """Level 0 of a per-source BFS: (source, node = source, dist = 0,
+    *carry) per row of ``sources`` (node), checkpointed."""
+    return (
+        sources.select(F.col("node").alias("source"))
+        .select("source", F.col("source").alias("node"), F.lit(0).alias("dist"), *carry)
+        .localCheckpoint(eager=True)
+    )
+
+
+def bfs_distances(edges: DataFrame, seeds: DataFrame, max_depth: int = 10) -> DataFrame:
+    """Min-hop distance from a seed set: (node, dist). ``seeds``: (node)."""
+    start = seeds.select("node").distinct().withColumn("dist", F.lit(0))
+    _, levels = _bfs_levels(edges, start, ("node",), max_depth)
+    return reduce(DataFrame.unionByName, levels)
 
 
 def multi_source_distances(
     edges: DataFrame, sources: DataFrame, max_depth: int = 8
 ) -> DataFrame:
     """Per-source min-hop distances: (source, node, dist), nodes reachable
-    within ``max_depth``. Level-synchronous for ALL sources at once — one
-    join + anti-join per level regardless of |sources|; the forward half of
-    the Brandes machinery without σ bookkeeping."""
-    edges = edges.select("src", "dst").localCheckpoint(eager=True)
-    frontier = (
-        sources.select(F.col("node").alias("source"))
-        .withColumn("node", F.col("source"))
-        .withColumn("dist", F.lit(0))
-        .localCheckpoint(eager=True)
-    )
-    seen = frontier
-    for level in range(1, max_depth + 1):
-        nxt = (
-            frontier.join(edges, frontier.node == edges.src)
-            .select("source", F.col("dst").alias("node"))
-            .distinct()
-            .join(seen.select("source", "node"), ["source", "node"], "left_anti")
-            .withColumn("dist", F.lit(level))
-            .localCheckpoint(eager=True)
-        )
-        if nxt.isEmpty():
-            break
-        seen = seen.unionByName(nxt)
-        frontier = nxt
-    return seen
+    within ``max_depth``, for all sources in one BFS."""
+    _, levels = _bfs_levels(edges, _source_frontier(sources), _PAIR, max_depth)
+    return reduce(DataFrame.unionByName, levels)
 
 
 def multi_source_shortest_paths(
     edges: DataFrame, sources: DataFrame, max_depth: int = 8
 ) -> DataFrame:
-    """Per-source min-hop distances WITH one reconstructed shortest path
-    per (source, node): (source, node, dist, path) where ``path`` is the
-    node-id array [source, …, node] (round-13, r12 VERDICT #3 — nodes(p)/
-    relationships(p) on shortestPath patterns need the actual chain, not
-    just the distance). Same level-synchronous multi-source BFS as
-    :func:`multi_source_distances`; the ONLY additions are an O(depth)
-    array column riding each frontier row and a deterministic min() pick
-    when several shortest paths reach a node in the same level (arrays are
-    orderable in Spark — lexicographic, so reruns agree; Neo4j returns an
-    arbitrary one). Still never enumerates the path SET — one candidate
-    per predecessor row per level, collapsed immediately; supersteps =
-    ``max_depth`` at any |V| or |sources|."""
-    edges = edges.select("src", "dst").localCheckpoint(eager=True)
-    frontier = (
-        sources.select(F.col("node").alias("source"))
-        .withColumn("node", F.col("source"))
-        .withColumn("dist", F.lit(0))
-        .withColumn("path", F.array(F.col("source")))
-        .localCheckpoint(eager=True)
+    """Per-source min-hop distances WITH one shortest path per (source,
+    node): (source, node, dist, path), ``path`` the node-id array [source,
+    …, node] (nodes(p)/relationships(p) on shortestPath patterns need the
+    chain, not just the distance). Of several shortest paths the
+    lexicographically smallest array is kept (arrays are orderable in
+    Spark, so reruns agree; Neo4j returns an arbitrary one). The path SET is
+    never enumerated: one candidate per predecessor row, collapsed by min()
+    at each level."""
+    start = _source_frontier(sources, F.array(F.col("source")).alias("path"))
+    _, levels = _bfs_levels(
+        edges,
+        start,
+        _PAIR,
+        max_depth,
+        carry=(F.array_append("path", F.col("dst")).alias("path"),),
+        aggs=(F.min("path").alias("path"),),
     )
-    seen = frontier
-    for level in range(1, max_depth + 1):
-        nxt = (
-            frontier.join(edges, frontier.node == edges.src)
-            .select(
-                "source",
-                F.col("dst").alias("node"),
-                F.array_append("path", F.col("dst")).alias("path"),
-            )
-            .join(seen.select("source", "node"), ["source", "node"], "left_anti")
-            .groupBy("source", "node")
-            .agg(F.min("path").alias("path"))
-            .withColumn("dist", F.lit(level))
-            .localCheckpoint(eager=True)
-        )
-        if nxt.isEmpty():
-            break
-        seen = seen.unionByName(nxt)
-        frontier = nxt
-    return seen
+    return reduce(DataFrame.unionByName, levels)
 
 
 def multi_source_k_shortest_paths(
@@ -315,12 +313,10 @@ def multi_source_k_shortest_paths(
     AND up to ``k`` enumerated shortest paths per (source, node) —
     (source, node, dist, sigma, paths) where ``paths`` is an array of
     '|'-joined node-id strings, the k lexicographically-smallest shortest
-    paths (round-14, r13 VERDICT 'missing' #6: allShortestPaths kept σ
-    without enumeration; this is the bounded-K enumeration variant).
+    paths (the bounded-K enumeration variant of allShortestPaths).
 
-    Same level-synchronous multi-source BFS; each frontier row carries at
-    most k candidate path strings, extended with one transform() lambda
-    per level and re-capped per (source, node) with
+    Each level extends the carried strings with one transform() lambda and
+    re-caps them per (source, node) with
     slice(array_sort(flatten(collect_list())), 1, k). The cap is EXACT,
     not approximate: top-k distributes over union, and within one
     (source, node, dist) group no path string is a strict prefix of
@@ -328,83 +324,38 @@ def multi_source_k_shortest_paths(
     common suffix preserves string order — the k kept prefixes at every
     predecessor are exactly the prefixes the k smallest full paths need.
     σ rides separately as the exact Brandes sum, so the bound is visible:
-    sigma > size(paths) means paths were capped.
-
-    Scale: supersteps = ``max_depth`` at any |V| or |sources|; row width
-    is O(k · depth) id strings — never the path-set explosion that makes
-    unbounded allShortestPaths the 100 TB anti-pattern."""
-    edges = edges.select("src", "dst").localCheckpoint(eager=True)
-    frontier = (
-        sources.select(F.col("node").alias("source"))
-        .withColumn("node", F.col("source"))
-        .withColumn("dist", F.lit(0))
-        .withColumn("sigma", F.lit(1).cast("long"))
-        .withColumn("paths", F.array(F.col("source")))
-        .localCheckpoint(eager=True)
+    sigma > size(paths) means paths were capped. Row width is O(k · depth)
+    id strings — never the path-set explosion of unbounded
+    allShortestPaths."""
+    start = _source_frontier(
+        sources, F.lit(1).cast("long").alias("sigma"), F.array(F.col("source")).alias("paths")
     )
-    seen = frontier
-    for level in range(1, max_depth + 1):
-        nxt = (
-            frontier.join(edges, frontier.node == edges.src)
-            .select(
-                "source",
-                F.col("dst").alias("node"),
-                "sigma",
-                F.expr(
-                    "transform(paths, p -> concat(p, '|', dst))"
-                ).alias("paths"),
-            )
-            .join(seen.select("source", "node"), ["source", "node"], "left_anti")
-            .groupBy("source", "node")
-            .agg(
-                F.sum("sigma").alias("sigma"),
-                F.slice(
-                    F.array_sort(F.flatten(F.collect_list("paths"))), 1, k
-                ).alias("paths"),
-            )
-            .withColumn("dist", F.lit(level))
-            .localCheckpoint(eager=True)
-        )
-        if nxt.isEmpty():
-            break
-        seen = seen.unionByName(nxt.select(*seen.columns))
-        frontier = nxt
-    return seen
+    _, levels = _bfs_levels(
+        edges,
+        start,
+        _PAIR,
+        max_depth,
+        carry=("sigma", F.expr("transform(paths, p -> concat(p, '|', dst))").alias("paths")),
+        aggs=(
+            F.sum("sigma").alias("sigma"),
+            F.slice(F.array_sort(F.flatten(F.collect_list("paths"))), 1, k).alias("paths"),
+        ),
+    )
+    return reduce(DataFrame.unionByName, levels)
 
 
 def multi_source_sigma(
     edges: DataFrame, sources: DataFrame, max_depth: int = 8
 ) -> DataFrame:
     """Per-source shortest-path COUNTS: (source, node, dist, sigma) — the
-    forward half of the Brandes machinery (level-synchronous BFS summing σ
-    over predecessors) exposed standalone for allShortestPaths(): σ(s, v) =
-    number of distinct min-hop paths s→v, computed WITHOUT enumerating
-    paths (one join + σ-summing aggregate per level for all sources at
-    once; supersteps = ``max_depth`` at any |V| or |sources|)."""
-    edges = edges.select("src", "dst").localCheckpoint(eager=True)
-    frontier = (
-        sources.select(F.col("node").alias("source"))
-        .withColumn("node", F.col("source"))
-        .withColumn("dist", F.lit(0))
-        .withColumn("sigma", F.lit(1).cast("long"))
-        .localCheckpoint(eager=True)
+    forward half of the Brandes machinery (σ summed over predecessors)
+    exposed standalone for allShortestPaths(): σ(s, v) = number of distinct
+    min-hop paths s→v, computed WITHOUT enumerating paths."""
+    start = _source_frontier(sources, F.lit(1).cast("long").alias("sigma"))
+    _, levels = _bfs_levels(
+        edges, start, _PAIR, max_depth, carry=("sigma",), aggs=(F.sum("sigma").alias("sigma"),)
     )
-    seen = frontier
-    for level in range(1, max_depth + 1):
-        nxt = (
-            frontier.join(edges, frontier.node == edges.src)
-            .select("source", F.col("dst").alias("node"), "sigma")
-            .join(seen.select("source", "node"), ["source", "node"], "left_anti")
-            .groupBy("source", "node")
-            .agg(F.sum("sigma").alias("sigma"))
-            .withColumn("dist", F.lit(level))
-            .localCheckpoint(eager=True)
-        )
-        if nxt.isEmpty():
-            break
-        seen = seen.unionByName(nxt.select("source", "node", "dist", "sigma"))
-        frontier = nxt
-    return seen
+    return reduce(DataFrame.unionByName, levels)
 
 
 def closeness(edges: DataFrame, sources: DataFrame, max_depth: int = 8) -> DataFrame:
@@ -434,13 +385,10 @@ def weighted_sssp(edges: DataFrame, source: str, max_iter: int = 20) -> DataFram
     edges = edges.select("src", "dst", "weight").localCheckpoint(eager=True)
     state = edges.sparkSession.createDataFrame([(source, 0.0)], "node STRING, cost DOUBLE")
 
-    from mimranalytics_core_spark.plans.pregel import CHANGED_COL
-
     def step(costs):
-        # folded flag (round-15): the node's own carry-over row is tagged,
-        # so the relaxation aggregate also yields the old cost — changed =
-        # improved OR newly reached (no self row → __old null), replacing
-        # the per-check old-vs-new left join of the legacy protocol
+        # folded flag: the node's own carry-over row is tagged, so the
+        # relaxation aggregate also yields the old cost — changed =
+        # improved OR newly reached (no self row → __old null)
         relaxed = (
             costs.join(edges, costs.node == edges.src)
             .select(F.col("dst").alias("node"), (F.col("cost") + F.col("weight")).alias("cost"))
@@ -460,7 +408,7 @@ def weighted_sssp(edges: DataFrame, source: str, max_iter: int = 20) -> DataFram
             F.coalesce(F.col("cost") < F.col("__old"), F.lit(True)).alias(CHANGED_COL),
         )
 
-    return iterate_fixpoint(state, step, None, max_iter=max_iter)
+    return iterate_fixpoint(state, step, max_iter=max_iter)
 
 
 def connected_components(
@@ -477,8 +425,7 @@ def connected_components(
     reachability) or when the caller knows the diameter bound.
 
     With ``check_convergence=True`` the fixpoint test uses pregel.py's
-    FOLDED-FLAG protocol (round-15 — previously the legacy old-vs-new join):
-    the union feeding the min-aggregate tags each node's own carry-over row,
+    folded flag: the union feeding the min-aggregate tags each node's own carry-over row,
     so the aggregate emits both the new label and the old one, and
     ``__changed`` = new < old costs nothing beyond the agg the superstep
     already runs. Convergence is then a filter scan on the materialized
@@ -495,8 +442,6 @@ def connected_components(
     state = und.select(F.col("src").alias("node")).distinct().withColumn(
         "component", F.col("node")
     )
-
-    from mimranalytics_core_spark.plans.pregel import CHANGED_COL
 
     def step(labels):
         prop = und.join(labels, und.src == labels.node).select(
@@ -530,7 +475,6 @@ def connected_components(
     return iterate_fixpoint(
         state,
         step,
-        None,
         max_iter=max_iter,
         state_partitions=state_partitions,
     )
@@ -617,12 +561,15 @@ def pagerank(
         # Checkpoint EVERY iteration: the next iteration's dangling-mass
         # aggregate re-reads ``ranks``; un-checkpointed, that branch would
         # recompute the whole previous superstep (join+agg) a second time —
-        # one cheap materialization beats one redundant shuffle. LAZY
-        # (round-16 A/B hook): eager forced one driver-blocking job per
-        # iteration; lazy materializes on first use with identical reuse.
+        # one cheap materialization beats one redundant shuffle. LAZY:
+        # eager forced one driver-blocking job per iteration; lazy
+        # materializes on first use inside the consuming job with identical
+        # lineage truncation and reuse (graph_pagerank_weighted 2.98 ->
+        # 2.79 s at sf0.1). The once-computed frames above stay eager: many
+        # jobs read them, driver-side count() included.
         if state_partitions is not None:
             ranks = ranks.coalesce(state_partitions)
-        ranks = ranks.localCheckpoint(eager=_PR_CKPT_EAGER)
+        ranks = ranks.localCheckpoint(eager=False)
     return ranks
 
 
@@ -738,7 +685,7 @@ def pagerank_personalized(
         )
         if state_partitions is not None:
             ranks = ranks.coalesce(state_partitions)
-        ranks = ranks.localCheckpoint(eager=_PR_CKPT_EAGER)
+        ranks = ranks.localCheckpoint(eager=False)
     return ranks
 
 
@@ -755,11 +702,11 @@ def betweenness(
     semantics; ``sources``: (node). Exact for the given sources; sampling
     sources is the standard estimator at scale (full Brandes is O(V·E)).
 
-    Forward phase: level-synchronous BFS carrying σ (shortest-path counts)
-    for ALL sources at once — state is (source, node, dist, sigma), one
-    shuffle per level. Backward phase: dependency accumulation
-    δ(v) += σ(v)/σ(w)·(1+δ(w)) processed by descending level, again one
-    join/agg per level. Total supersteps ≤ 2·diameter regardless of |V|.
+    Forward phase: the shared BFS (:func:`_bfs_levels`) summing σ
+    (shortest-path counts) for ALL sources at once. Backward phase:
+    dependency accumulation δ(v) += σ(v)/σ(w)·(1+δ(w)) processed by
+    descending level, again one join/agg per level. Total supersteps ≤
+    2·diameter regardless of |V|.
 
     ``edge_scores=True`` returns EDGE betweenness instead — (src, dst,
     edge_betweenness) over canonical undirected pairs: the per-(v, w)
@@ -768,54 +715,31 @@ def betweenness(
     final sum (Girvan–Newman's scoring phase; the node recursion is
     unchanged and bit-identical).
     """
-    spark_f = F
-    # materialize once: both phases join edges per level; a lazy derivation
-    # would be re-executed 2·diameter times
-    edges = edges.select("src", "dst")
-    if state_partitions is not None:
-        edges = edges.coalesce(state_partitions)
-    edges = edges.localCheckpoint(eager=True)
-    frontier = (
-        sources.select(spark_f.col("node").alias("source"))
-        .withColumn("node", spark_f.col("source"))
-        .withColumn("dist", spark_f.lit(0))
-        .withColumn("sigma", spark_f.lit(1.0))
-        .localCheckpoint(eager=True)
+    # the backward phase joins the same checkpointed edges per level
+    edges, levels = _bfs_levels(
+        edges,
+        _source_frontier(sources, F.lit(1.0).alias("sigma")),
+        _PAIR,
+        max_depth,
+        carry=("sigma",),
+        aggs=(F.sum("sigma").alias("sigma"),),
+        state_partitions=state_partitions,
     )
-    visited = frontier
-    levels = [frontier]
-    for level in range(1, max_depth + 1):
-        nxt = (
-            frontier.join(edges, frontier.node == edges.src)
-            .select("source", spark_f.col("dst").alias("node"), "sigma")
-            .join(visited.select("source", "node"), ["source", "node"], "left_anti")
-            .groupBy("source", "node")
-            .agg(spark_f.sum("sigma").alias("sigma"))
-            .withColumn("dist", spark_f.lit(level))
-        )
-        if state_partitions is not None:
-            nxt = nxt.coalesce(state_partitions)
-        nxt = nxt.localCheckpoint(eager=True)
-        if nxt.isEmpty():
-            break
-        levels.append(nxt)
-        visited = visited.unionByName(nxt.select("source", "node", "dist", "sigma"))
-        frontier = nxt
     # backward accumulation, deepest level first; columns renamed per role to
     # avoid self-join ambiguity (levels share lineage)
     delta = None  # (source, node, delta) for processed levels
     edelta = None  # (ea, eb, c) edge-dependency terms when edge_scores
     for lev in range(len(levels) - 1, 0, -1):
         w_nodes = levels[lev].select(
-            spark_f.col("source").alias("wsource"),
-            spark_f.col("node").alias("w"),
-            spark_f.col("sigma").alias("sigma_w"),
+            F.col("source").alias("wsource"),
+            F.col("node").alias("w"),
+            F.col("sigma").alias("sigma_w"),
         )
         if delta is not None:
             d = delta.select(
-                spark_f.col("source").alias("dsource"),
-                spark_f.col("node").alias("dnode"),
-                spark_f.col("delta").alias("dval"),
+                F.col("source").alias("dsource"),
+                F.col("node").alias("dnode"),
+                F.col("delta").alias("dval"),
             )
             w_nodes = (
                 w_nodes.join(
@@ -827,40 +751,34 @@ def betweenness(
                     "wsource",
                     "w",
                     "sigma_w",
-                    spark_f.coalesce("dval", spark_f.lit(0.0)).alias("delta_w"),
+                    F.coalesce("dval", F.lit(0.0)).alias("delta_w"),
                 )
             )
         else:
-            w_nodes = w_nodes.withColumn("delta_w", spark_f.lit(0.0))
+            w_nodes = w_nodes.withColumn("delta_w", F.lit(0.0))
         preds = levels[lev - 1].select(
-            spark_f.col("source").alias("psource"),
-            spark_f.col("node").alias("v"),
-            spark_f.col("sigma").alias("sigma_v"),
+            F.col("source").alias("psource"),
+            F.col("node").alias("v"),
+            F.col("sigma").alias("sigma_v"),
         )
         terms = (
             edges.join(w_nodes, edges.dst == w_nodes.w)
-            .join(
-                preds,
-                (spark_f.col("v") == edges.src)
-                & (spark_f.col("psource") == spark_f.col("wsource")),
-            )
+            .join(preds, (F.col("v") == edges.src) & (F.col("psource") == F.col("wsource")))
             .select(
-                spark_f.col("psource").alias("source"),
-                spark_f.col("v").alias("node"),
-                spark_f.col("w"),
-                (
-                    spark_f.col("sigma_v") / spark_f.col("sigma_w") * (1.0 + spark_f.col("delta_w"))
-                ).alias("c"),
+                F.col("psource").alias("source"),
+                F.col("v").alias("node"),
+                F.col("w"),
+                (F.col("sigma_v") / F.col("sigma_w") * (1.0 + F.col("delta_w"))).alias("c"),
             )
         )
         if edge_scores:
             e_part = terms.select(
-                spark_f.least("node", "w").alias("ea"),
-                spark_f.greatest("node", "w").alias("eb"),
+                F.least("node", "w").alias("ea"),
+                F.greatest("node", "w").alias("eb"),
                 "c",
             )
             edelta = e_part if edelta is None else edelta.unionByName(e_part)
-        contrib = terms.groupBy("source", "node").agg(spark_f.sum("c").alias("delta"))
+        contrib = terms.groupBy("source", "node").agg(F.sum("c").alias("delta"))
         if state_partitions is not None:
             contrib = contrib.coalesce(state_partitions)
         contrib = contrib.localCheckpoint(eager=True)
@@ -868,32 +786,23 @@ def betweenness(
     if edge_scores:
         if edelta is None:
             return edges.select(
-                spark_f.least("src", "dst").alias("src"),
-                spark_f.greatest("src", "dst").alias("dst"),
-            ).distinct().withColumn("edge_betweenness", spark_f.lit(0.0))
-        return (
-            edelta.groupBy(
-                spark_f.col("ea").alias("src"), spark_f.col("eb").alias("dst")
-            )
-            .agg(
-                (
-                    spark_f.floor(spark_f.sum("c") * 1e6 + spark_f.lit(0.5)) / 1e6
-                ).alias("edge_betweenness")
-            )
+                F.least("src", "dst").alias("src"),
+                F.greatest("src", "dst").alias("dst"),
+            ).distinct().withColumn("edge_betweenness", F.lit(0.0))
+        return edelta.groupBy(F.col("ea").alias("src"), F.col("eb").alias("dst")).agg(
+            (F.floor(F.sum("c") * 1e6 + F.lit(0.5)) / 1e6).alias("edge_betweenness")
         )
     if delta is None:
-        return sources.select("node").withColumn("betweenness", spark_f.lit(0.0))
+        return sources.select("node").withColumn("betweenness", F.lit(0.0))
     return (
-        delta.filter(spark_f.col("node") != spark_f.col("source"))
+        delta.filter(F.col("node") != F.col("source"))
         .groupBy("node")
         .agg(
             # floor(x·1e6+0.5)/1e6, not F.round: the engine's HALF_UP
             # discipline, digit-for-digit with the DuckDB oracle's
             # FLOOR(bw*1e6+0.5)/1e6 (F.round HALF_UPs the DECIMAL rendering,
             # which can differ at the ulp — see closeness() above)
-            (
-                spark_f.floor(spark_f.sum("delta") * 1e6 + spark_f.lit(0.5)) / 1e6
-            ).alias("betweenness")
+            (F.floor(F.sum("delta") * 1e6 + F.lit(0.5)) / 1e6).alias("betweenness")
         )
     )
 

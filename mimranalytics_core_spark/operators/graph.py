@@ -1721,7 +1721,7 @@ def graph_scc(spark, sf_dir):
             )
         )
 
-    reach = iterate_fixpoint(e, step, None, max_iter=12, state_partitions=8)
+    reach = iterate_fixpoint(e, step, max_iter=12, state_partitions=8)
     a = reach.alias("a")
     b = reach.alias("b")
     mutual = a.join(

@@ -14,13 +14,15 @@ things that kill naive loops at scale:
   after k iterations the plan tree is O(2^k). ``localCheckpoint(eager)``
   every ``checkpoint_every`` steps materializes the frontier and cuts the
   plan back to a leaf.
-- **Convergence via bounded work**: the loop re-derives a delta/frontier each
-  step and stops when it is empty (``isEmpty`` touches at most one partition
-  early-out) or at ``max_iter``.
+- **Convergence via bounded work**: each step flags the rows it changed and
+  the loop stops when none is flagged (``isEmpty`` touches at most one
+  partition early-out) or at ``max_iter``, where it warns that the result is
+  not a fixpoint.
 """
 
 from __future__ import annotations
 
+import warnings
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
@@ -30,27 +32,21 @@ from pyspark.sql import functions as F
 CHANGED_COL = "__changed"
 
 
-_STEP_CKPT_EAGER = False
-
-
 def iterate_fixpoint(
     state: DataFrame,
     step: Callable[[DataFrame], DataFrame],
-    changed: Callable[[DataFrame, DataFrame], DataFrame] | None = None,
     max_iter: int = 20,
     check_every: int = 2,
     state_partitions: int | None = None,
 ) -> DataFrame:
     """Iterate ``state = step(state)`` until no row changed.
 
-    Two convergence protocols:
-
-    - **Folded flag (preferred)**: ``step`` emits a boolean ``__changed``
-      column alongside the new state. Convergence = no flagged row in the
-      already-materialized checkpoint — a filter scan, no extra join and no
-      extra shuffle. The flag is stripped from the returned state.
-    - **``changed`` callback (legacy)**: returns a DataFrame whose emptiness
-      signals convergence — costs one old-vs-new join per check.
+    ``step`` emits a boolean ``__changed`` column alongside the new state.
+    Convergence = no flagged row in the already-materialized checkpoint — a
+    filter scan, no extra join and no extra shuffle. The flag is stripped
+    from the returned state. If the check at ``max_iter`` still finds
+    flagged rows, the partial state is returned with a ``RuntimeWarning``.
+    A ``step`` that emits no flag runs exactly ``max_iter`` supersteps.
 
     ``check_every`` batches convergence checks: a monotone step applied to an
     already-converged state is a no-op, so checking every k-th superstep
@@ -70,6 +66,7 @@ def iterate_fixpoint(
     # no-duplicates corpus / empty-graph case).
     if state.isEmpty():
         return state
+    flagged = False
     for i in range(max_iter):
         new_state = step(state.drop(CHANGED_COL) if CHANGED_COL in state.columns else state)
         flagged = CHANGED_COL in new_state.columns
@@ -81,12 +78,18 @@ def iterate_fixpoint(
         # LAZY since round-16: the checkpoint persists on first use (the
         # convergence scan or the next superstep) with identical reuse,
         # without one driver-blocking job per superstep.
-        new_state = new_state.localCheckpoint(eager=_STEP_CKPT_EAGER)
-        if (i + 1) % check_every == 0 or i == max_iter - 1:
-            if flagged:
-                if new_state.filter(F.col(CHANGED_COL)).isEmpty():
-                    return new_state.drop(CHANGED_COL)
-            elif changed is not None and changed(state, new_state).isEmpty():
-                return new_state
+        new_state = new_state.localCheckpoint(eager=False)
+        if flagged and ((i + 1) % check_every == 0 or i == max_iter - 1):
+            if new_state.filter(F.col(CHANGED_COL)).isEmpty():
+                return new_state.drop(CHANGED_COL)
         state = new_state
-    return state.drop(CHANGED_COL) if CHANGED_COL in state.columns else state
+    if not flagged:
+        return state
+    # the check at max_iter still found flagged rows
+    warnings.warn(
+        f"iterate_fixpoint: superstep budget (max_iter={max_iter}) exhausted with "
+        "changed rows remaining — the result is PARTIAL (not a fixpoint). Raise `max_iter`.",
+        RuntimeWarning,
+        stacklevel=2,
+    )
+    return state.drop(CHANGED_COL)

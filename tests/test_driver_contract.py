@@ -67,7 +67,7 @@ def test_bench_emits_single_json_line(tmp_path):
             "SPARK_GRAFT_CPUS": "8",
             "SPARK_GRAFT_BENCH_OUT": str(detail_path),
         },
-        cwd="/root/repo",
+        cwd=repo,
     )
     lines = [ln for ln in proc.stdout.splitlines() if ln.strip()]
     assert len(lines) == 1, proc.stdout[:500] + proc.stderr[-500:]

@@ -473,3 +473,87 @@ def test_greedy_coloring_matches_sequential(spark):
     # proper coloring invariant
     for s, d in raw:
         assert got[s] != got[d]
+
+
+def _shortest_path_reference(sources, max_depth):
+    """Pure-Python per-source BFS over the distinct directed edge pairs:
+    {(source, node): (dist, sigma, sorted '|'-joined shortest paths)}."""
+    from collections import deque
+
+    adj = {}
+    for s, d, _ in EDGE_LIST:
+        adj.setdefault(s, set()).add(d)
+    out = {}
+    for src in sources:
+        dist, paths = {src: 0}, {src: [[src]]}
+        q = deque([src])
+        while q:
+            v = q.popleft()
+            if dist[v] == max_depth:
+                continue
+            for w in sorted(adj.get(v, ())):
+                if w not in dist:
+                    dist[w] = dist[v] + 1
+                    paths[w] = []
+                    q.append(w)
+                if dist[w] == dist[v] + 1:
+                    paths[w] += [p + [w] for p in paths[v]]
+        for node, ps in paths.items():
+            out[(src, node)] = (dist[node], len(ps), sorted("|".join(p) for p in ps))
+    return out
+
+
+@pytest.fixture(scope="module")
+def sp_case(spark):
+    sources = sorted({s for s, _, _ in EDGE_LIST})[:20]
+    max_depth = 6
+    frame = spark.createDataFrame([(s,) for s in sources], "node STRING")
+    edges = spark.createDataFrame(
+        sorted({(s, d) for s, d, _ in EDGE_LIST}), "src STRING, dst STRING"
+    )
+    return edges, frame, max_depth, _shortest_path_reference(sources, max_depth)
+
+
+def test_multi_source_sigma_matches_reference(spark, sp_case):
+    from mimranalytics_core_spark.functions.graph_algos import multi_source_sigma
+
+    edges, sources, max_depth, want = sp_case
+    got = {
+        (r.source, r.node): (r.dist, r.sigma)
+        for r in multi_source_sigma(edges, sources, max_depth=max_depth).collect()
+    }
+    assert got == {k: (d, sigma) for k, (d, sigma, _) in want.items()}
+
+
+def test_multi_source_shortest_paths_match_reference(spark, sp_case):
+    from mimranalytics_core_spark.functions.graph_algos import (
+        multi_source_shortest_paths,
+    )
+
+    edges, sources, max_depth, want = sp_case
+    got = {
+        (r.source, r.node): (r.dist, list(r.path))
+        for r in multi_source_shortest_paths(edges, sources, max_depth=max_depth).collect()
+    }
+    # the kept path is the lexicographically smallest node-id array
+    assert got == {
+        k: (d, min(p.split("|") for p in ps)) for k, (d, _, ps) in want.items()
+    }
+
+
+def test_multi_source_k_shortest_paths_match_reference(spark, sp_case):
+    from mimranalytics_core_spark.functions.graph_algos import (
+        multi_source_k_shortest_paths,
+    )
+
+    edges, sources, max_depth, want = sp_case
+    k = 2
+    got = {
+        (r.source, r.node): (r.dist, r.sigma, list(r.paths))
+        for r in multi_source_k_shortest_paths(
+            edges, sources, max_depth=max_depth, k=k
+        ).collect()
+    }
+    assert got == {k_: (d, sigma, ps[:k]) for k_, (d, sigma, ps) in want.items()}
+    # the cap is visible: some pair has more shortest paths than it keeps
+    assert any(sigma > k for _, sigma, _ in got.values())

@@ -1,7 +1,9 @@
 """Round-budget convergence warnings for the greedy graph algorithms
 (r8 ADVICE, medium): greedy_mis/greedy_matching/greedy_coloring/boruvka_msf
 promise maximality, so a budget-truncated run must warn that the result is
-PARTIAL instead of silently returning a non-maximal set."""
+PARTIAL instead of silently returning a non-maximal set. The Pregel harness
+(plans/pregel.iterate_fixpoint) warns the same way when a flagged fixpoint
+loop reaches ``max_iter`` unconverged."""
 
 from __future__ import annotations
 
@@ -11,6 +13,7 @@ import pytest
 
 from mimranalytics_core_spark.functions.graph_algos import (
     boruvka_msf,
+    connected_components,
     greedy_coloring,
     greedy_matching,
     greedy_mis,
@@ -81,3 +84,19 @@ def test_boruvka_converged_no_warning(spark):
         warnings.simplefilter("error")
         out = boruvka_msf(_weighted_path(spark, 10), rounds=6)
     assert out.count() == 9  # a path IS its own spanning tree
+
+
+def test_fixpoint_warns_on_partial(spark):
+    # min-label propagation moves one hop per superstep: the 8-path needs 7
+    with pytest.warns(RuntimeWarning, match="iterate_fixpoint.*PARTIAL"):
+        out = connected_components(_path_edges(spark), max_iter=3)
+    assert out.select("component").distinct().count() > 1
+
+
+def test_fixpoint_converged_no_warning(spark):
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        out = connected_components(_path_edges(spark), max_iter=20)
+        # an unflagged loop runs its fixed step count by design: silent
+        connected_components(_path_edges(spark), max_iter=3, check_convergence=False)
+    assert {r.component for r in out.collect()} == {1}
