@@ -42,7 +42,7 @@ def expand_neighborhood(
     undirected neighborhood of a seed entity set → (node, hop)."""
     tables(spark, sf_dir)
     edges = undirect(catalog.hierarchy_edges(spark, sf_dir))
-    seeds = spark.createDataFrame([(e,) for e in entities], "node STRING")
+    seeds = catalog.literal_frame(spark, [(e,) for e in entities], "node STRING")
     return bfs_distances(edges, seeds, max_depth=hops).withColumnRenamed("dist", "hop")
 
 
@@ -52,7 +52,13 @@ def ubo_report(
     """UBO identification (README.md:13): owners whose effective (multi-path,
     depth-bounded) ownership of an entity meets the threshold."""
     tables(spark, sf_dir)
-    edges = catalog.hierarchy_edges(spark, sf_dir)
+    # materialized once: `owners`, closure level 0, every level's join and
+    # the final aggregate each read it
+    edges = (
+        catalog.hierarchy_edges(spark, sf_dir)
+        .select("src", "dst", "rel_type", "weight")
+        .localCheckpoint(eager=True)
+    )
     owners = edges.filter(F.col("rel_type") == "customer_of").select("src").distinct()
     ubo = ubo_closure(edges, max_depth=max_depth, threshold=threshold)
     return (
@@ -697,7 +703,7 @@ def export_graph_viz(
 
     tables(spark, sf_dir)
     edges = catalog.hierarchy_edges(spark, sf_dir).select("src", "dst")
-    seeds = spark.createDataFrame([(e,) for e in entities], "node STRING")
+    seeds = catalog.literal_frame(spark, [(e,) for e in entities], "node STRING")
     nodes = bfs_distances(undirect(edges), seeds, max_depth=hops)
     keep = nodes.select("node")
     sub_edges = (

@@ -22,8 +22,11 @@ from __future__ import annotations
 import functools
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType
 
 # ---------------------------------------------------------------------------
 # View-construction memo (round-15 optimization)
@@ -173,6 +176,25 @@ def load(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         df.createOrReplaceTempView(name)
         tables[name] = df
     return tables
+
+
+def literal_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
+    """A small driver-side frame of ``rows`` (tuples) with the DDL schema
+    ``ddl``, planned as a ``LocalTableScan``.
+
+    Built from a ``pyarrow.Table``, so the rows live in the plan itself and
+    the driver evaluates the scan without a job. The list form
+    ``spark.createDataFrame(rows, ddl)`` plans as ``Scan ExistingRDD`` over a
+    Python RDD instead: every evaluation of it launches Python-worker tasks,
+    and a BFS frontier is evaluated once per level. The pandas form is no
+    substitute: an empty pandas frame falls back to the Python RDD."""
+    schema = DataType.fromDDL(ddl)
+    arrow = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
 
 
 # ---------------------------------------------------------------------------

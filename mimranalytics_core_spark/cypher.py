@@ -7264,7 +7264,7 @@ def _schema_procedure(
             f"db.{proc}() yields one column named {col!r}: "
             f"YIELD {yname} does not match"
         )
-    return spark.createDataFrame([(v,) for v in vals], f"{col} string")
+    return catalog.literal_frame(spark, [(v,) for v in vals], f"{col} string")
 
 
 def _join_clause(

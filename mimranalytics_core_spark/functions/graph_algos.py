@@ -33,6 +33,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mimranalytics_core_spark.catalog import literal_frame
 from mimranalytics_core_spark.plans.pregel import CHANGED_COL, iterate_fixpoint
 
 
@@ -229,7 +230,12 @@ def _bfs_levels(
     grouping keys, so each group is kept or dropped whole, and in this
     order Catalyst keeps the anti-join above the edge join. Supersteps ≤
     ``max_depth`` at any |V| or number of sources; ``state_partitions``
-    coalesces the edges and every level."""
+    coalesces the edges and every level.
+
+    Level 0 is never checkpointed here: level 1's join, every level's
+    anti-join against the settled keys and the caller's final union each
+    re-read it. Callers must pass a local (``catalog.literal_frame``) or
+    checkpointed frontier, or its whole lineage re-runs that often."""
     edges = edges.select("src", "dst")
     if state_partitions is not None:
         edges = edges.coalesce(state_partitions)
@@ -268,7 +274,10 @@ def _source_frontier(sources: DataFrame, *carry) -> DataFrame:
 
 
 def bfs_distances(edges: DataFrame, seeds: DataFrame, max_depth: int = 10) -> DataFrame:
-    """Min-hop distance from a seed set: (node, dist). ``seeds``: (node)."""
+    """Min-hop distance from a seed set: (node, dist). ``seeds``: (node),
+    local (``catalog.literal_frame``) or checkpointed: it is level 0 of
+    ``_bfs_levels``, re-read by every level's anti-join and by the final
+    union."""
     start = seeds.select("node").distinct().withColumn("dist", F.lit(0))
     _, levels = _bfs_levels(edges, start, ("node",), max_depth)
     return reduce(DataFrame.unionByName, levels)
@@ -383,7 +392,7 @@ def weighted_sssp(edges: DataFrame, source: str, max_iter: int = 20) -> DataFram
     """Min-cost (sum of weights) from ``source``: (node, cost). Bellman-Ford
     style relaxation to fixpoint over the distributed edge list."""
     edges = edges.select("src", "dst", "weight").localCheckpoint(eager=True)
-    state = edges.sparkSession.createDataFrame([(source, 0.0)], "node STRING, cost DOUBLE")
+    state = literal_frame(edges.sparkSession, [(source, 0.0)], "node STRING, cost DOUBLE")
 
     def step(costs):
         # folded flag: the node's own carry-over row is tagged, so the

@@ -298,7 +298,7 @@ def graph_shortest_path(spark, sf_dir, max_depth: int = 4):
 
     tables(spark, sf_dir)
     und = undirect(catalog.hierarchy_edges(spark, sf_dir))
-    seeds = spark.createDataFrame([("c:1",)], "node STRING")
+    seeds = catalog.literal_frame(spark, [("c:1",)], "node STRING")
     return bfs_distances(und, seeds, max_depth=max_depth).select(
         "node", F.col("dist").cast("int").alias("dist")
     )
@@ -2176,7 +2176,7 @@ def graph_ego_edges(spark, sf_dir):
         .distinct()
     )
     ego = (
-        spark.createDataFrame([("c:1",)], "node STRING")
+        catalog.literal_frame(spark, [("c:1",)], "node STRING")
         .union(n1)
         .union(n2)
         .distinct()

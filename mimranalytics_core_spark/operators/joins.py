@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from mimranalytics_core_spark import catalog
 from mimranalytics_core_spark.operators._base import t
 from mimranalytics_core_spark.registry import register
 
@@ -311,7 +312,8 @@ def join_self_conflict(spark, sf_dir):
 )
 def join_theta_range(spark, sf_dir):
     p = t(spark, sf_dir, "part")
-    bands = spark.createDataFrame(
+    bands = catalog.literal_frame(
+        spark,
         [(0, 0.0, 500.0), (1, 500.0, 1000.0), (2, 1000.0, 1500.0), (3, 1500.0, 100000.0)],
         "band_id INT, lo DOUBLE, hi DOUBLE",
     )

@@ -17,6 +17,23 @@ def test_expand_neighborhood_hops(spark):
     assert any(n.startswith("r:") and h == 2 for n, h in res.items())
 
 
+def test_expand_neighborhood_no_entities_is_empty(spark):
+    res = api.expand_neighborhood(spark, SF_SMALL, [], hops=2)
+    assert res.columns == ["node", "hop"]
+    assert res.collect() == []
+
+
+def test_expand_neighborhood_two_entities_is_per_node_min(spark):
+    def hops(entities):
+        res = api.expand_neighborhood(spark, SF_SMALL, entities, hops=2).collect()
+        return {r.node: r.hop for r in res}
+
+    a, b, both = hops(["c:1"]), hops(["s:3"]), hops(["c:1", "s:3"])
+    want = {n: min(h for h in (a.get(n), b.get(n)) if h is not None) for n in a.keys() | b.keys()}
+    assert both == want
+    assert a.keys() - b.keys() and b.keys() - a.keys()
+
+
 def test_ubo_report_threshold_and_owners(spark):
     res = api.ubo_report(spark, SF_SMALL, threshold=0.25)
     rows = res.collect()

@@ -229,3 +229,31 @@ def test_zscore_anomaly_matches_pandas_rolling(spark):
     assert set(got) == set(want) and got
     for k in got:
         assert abs(got[k] - want[k]) < 2e-6
+
+
+def test_no_python_rdd_literal_frames():
+    """Driver-side literal rows go through ``catalog.literal_frame`` (whose
+    own ``createDataFrame`` takes a pyarrow table): a ``createDataFrame``
+    over a Python list, tuple or comprehension plans as a Python-RDD
+    ``Scan ExistingRDD`` that re-runs Python-worker tasks on every
+    evaluation."""
+    import ast
+    from pathlib import Path
+
+    import mimranalytics_core_spark
+
+    literal = (ast.List, ast.Tuple, ast.Set, ast.ListComp, ast.SetComp, ast.GeneratorExp)
+    pkg = Path(mimranalytics_core_spark.__file__).parent
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "createDataFrame"
+            ):
+                continue
+            data = [k.value for k in node.keywords if k.arg == "data"] + node.args[:1]
+            if any(isinstance(d, literal) for d in data):
+                offenders.append(f"{path.relative_to(pkg)}:{node.lineno}")
+    assert not offenders, f"use catalog.literal_frame: {offenders}"

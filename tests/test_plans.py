@@ -6,6 +6,10 @@ A plan regression here is a 100 TB performance bug even when results match.
 
 from __future__ import annotations
 
+import pytest
+from pyspark.sql.types import DataType
+
+from mimranalytics_core_spark import catalog
 from mimranalytics_core_spark.registry import all_ops
 from tests.conftest import SF_SMALL
 
@@ -487,3 +491,22 @@ def test_business_rollup_plan_shape(spark):
     # several orders scans exist (the PLACED edge frame + the attribute
     # side); the year filter must sit on at least one, pre-join
     assert scan and any("year" in ln for ln in scan)
+
+
+@pytest.mark.parametrize(
+    "rows, ddl",
+    [
+        ([], "node STRING"),
+        ([("c:1",)], "node STRING"),
+        ([(0, 0.0, "a"), (1, 2.5, None)], "band_id INT, lo DOUBLE, name STRING"),
+    ],
+)
+def test_literal_frame_is_local_table_scan(spark, rows, ddl):
+    """A driver-side literal plans as LocalTableScan, evaluated by the driver
+    with no job, never as a Python-RDD ``Scan ExistingRDD`` that launches
+    Python-worker tasks every time a BFS level re-reads it."""
+    df = catalog.literal_frame(spark, rows, ddl)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.lstrip().startswith("LocalTableScan"), plan
+    assert df.schema == DataType.fromDDL(ddl)
+    assert [tuple(r) for r in df.collect()] == rows
